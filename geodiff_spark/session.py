@@ -5,6 +5,17 @@ confs apply (AQE, Arrow, skew-join) and ``spark.sql.shuffle.partitions``
 should be ~2-3x total cores. Iceberg is the production table format; in
 this sandbox (no Iceberg jars) the snapshot store falls back to parquet
 with hash-bucketed layout (see geodiff_spark.sources.snapshots).
+
+Driver heap: ``SPARK_DRIVER_MEM`` wins when set. Otherwise the heap is
+half the memory this process may use (physical RAM, capped by a cgroup v2
+``memory.max`` limit), at most ``48g``. In local mode the driver heap is
+the only executor heap, and Spark sizes its storage/execution pools from
+it: a heap larger than the host makes Spark keep cached blocks in memory
+that does not exist, and the kernel OOM-kills the JVM instead of Spark
+spilling to disk. The other half is left for the JVM's off-heap buffers
+(Arrow, netty), the Python workers and the calling process. Hosts with
+>= 96 GiB keep the ``48g`` cap. Under ``spark-submit`` the driver JVM is
+already running, so the cluster launcher decides its memory.
 """
 
 from __future__ import annotations
@@ -32,6 +43,31 @@ ENGINE_CONFS = {
 }
 
 
+def usable_memory_bytes() -> int:
+    """Memory this process may use: physical RAM, or the cgroup v2
+    ``memory.max`` limit when that file holds a smaller number."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+    except OSError:
+        return total
+    return min(total, int(limit)) if limit.isdigit() else total
+
+
+def driver_memory(mem_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` value: ``SPARK_DRIVER_MEM`` verbatim when
+    set, else half of ``mem_bytes`` (default: ``usable_memory_bytes()``)
+    in MiB, capped at ``48g``."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    if mem_bytes is None:
+        mem_bytes = usable_memory_bytes()
+    half_mb = mem_bytes // 2 // 2**20
+    return "48g" if half_mb >= 48 * 1024 else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = "geodiff_spark",
     cores: int | str | None = None,
@@ -42,6 +78,9 @@ def get_spark(
 
     ``cores`` is the local parallelism (int or "*"); honored only when no
     master is configured externally (spark-submit on a cluster wins).
+    ``spark.driver.memory`` comes from ``driver_memory()``:
+    ``SPARK_DRIVER_MEM`` if set, else half the host's usable memory,
+    capped at ``48g``.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -54,7 +93,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in ENGINE_CONFS.items():

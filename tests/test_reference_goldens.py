@@ -15,6 +15,7 @@ stdlib sqlite3, expected binary changesets decoded by our wire reader.
 from __future__ import annotations
 
 import json
+import os
 import sqlite3
 
 import pytest
@@ -29,6 +30,11 @@ from geodiff_spark.operators.rebase import rebase_table
 from geodiff_spark.sources.changeset_io import read_changeset_file
 
 TD = "/root/reference/geodiff/tests/testdata"
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(TD),
+    reason=f"reference geodiff fixture directory {TD} is not present",
+)
 
 _GEOM = (
     "POINT", "LINESTRING", "POLYGON", "GEOMETRY", "MULTIPOINT",
